@@ -4,8 +4,8 @@
 The shipped-engine N->4N verdict (BENCH/BASELINE.md) is measured at 2M
 rows, where it reads 0.765 against the host's 1.34x CPU-inflation
 ceiling. This runner re-scores the same pair at 4x the data (default
-8M rows, sharded corpus tiling the fixed 500k-row distribution like
-bin/data_scaling_campaign.py) to separate the two candidate causes:
+8M rows, sharded corpus tiling the fixed 500k-row distribution, see
+synth.write_clips_parquet_sharded) to separate the two candidate causes:
 
 - if the ratio RISES toward/past 0.8, the 2M shortfall was partly
   fixed per-leg overhead (startup, stage commits) that more work
@@ -87,7 +87,7 @@ def main() -> None:
                   file=sys.stderr)
             continue
         print(f"leg {i}: local[{cores}] ...", file=sys.stderr)
-        r = run_at(cores, clips_path, ckpt_base, None, "join", args.rows, "window")
+        r = run_at(cores, clips_path, ckpt_base, None, args.rows)
         r["order"] = i
         legs.append(r)
         _write(out_path, args, legs)

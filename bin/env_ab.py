@@ -1,8 +1,7 @@
 #!/usr/bin/env python
 """Interleaved pipeline-level A/B over ONE env knob (crash-safe).
 
-Generalizes bin/minhash_scheme_ab.py: any SPARK_GRAFT_* (or Spark-
-reaching) env var, legs alternated A,B,A,B in ONE session on the tmpfs
+Any SPARK_GRAFT_* (or Spark-reaching) env var, legs alternated A,B,A,B in ONE session on the tmpfs
 corpus so box drift cancels — the only comparison protocol that holds
 on this host (BENCH/BASELINE.md noise sections). Fresh JVM per leg via
 scaling_bench.run_at, so the env var is read at session build / UDF
@@ -70,8 +69,7 @@ def main() -> None:
             os.environ.pop(args.var, None)
         print(f"leg {i}: {args.var}={val or '<unset>'} local[{args.cores}] ...",
               file=sys.stderr)
-        r = run_at(args.cores, clips_path, ckpt_base, args.sp, "join",
-                   args.rows, "window")
+        r = run_at(args.cores, clips_path, ckpt_base, args.sp, args.rows)
         r["value"] = val or "<unset>"
         r["order"] = i
         legs.append(r)

@@ -68,8 +68,7 @@ spark = get_spark(app=f"scaling-{{cores}}", master=f"local[{{cores}}]",
 clips = spark.read.parquet({clips_path!r})
 ckpt = tempfile.mkdtemp(prefix=f"scaling-ckpt-{{cores}}-", dir={ckpt_base!r})
 t0 = time.time()
-pipe = DedupPipeline(spark, ckpt, EngineConfig(partitions=sp, pair_gen={pair_gen!r},
-                                               sizing={sizing!r}))
+pipe = DedupPipeline(spark, ckpt, EngineConfig(partitions=sp))
 clusters = pipe.run(clips)
 n = clusters.count()
 wall = time.time() - t0
@@ -130,10 +129,9 @@ def _cpu_jiffies() -> tuple[int, int]:
 
 
 def run_at(cores: int, clips_path: str, ckpt_base: str | None, sp: int | None = None,
-           pair_gen: str = "join", n_rows: int = 2_000_000,
-           sizing: str = "window") -> dict:
+           n_rows: int = 2_000_000) -> dict:
     code = CHILD.format(repo=REPO, cores=cores, clips_path=clips_path, ckpt_base=ckpt_base,
-                        sp=sp, pair_gen=pair_gen, n_rows=n_rows, sizing=sizing)
+                        sp=sp, n_rows=n_rows)
     s0, t0 = _cpu_jiffies()
     out = subprocess.run(
         [sys.executable, "-c", code],
@@ -167,20 +165,6 @@ def main() -> None:
         "partition counts) across core counts, modeling a real cluster where "
         "the partition count does not track executor count; default: "
         "data-sized (rows/16k, floored at cores*2)",
-    )
-    ap.add_argument(
-        "--pair-gen",
-        default="join",
-        choices=["agg", "join"],
-        help="candidate_pairs cold-path expansion (EngineConfig.pair_gen) "
-        "for pipeline-level A-B runs",
-    )
-    ap.add_argument(
-        "--sizing",
-        default="window",
-        choices=["window", "join"],
-        help="candidate_pairs group-sizing mode (EngineConfig.sizing) "
-        "for pipeline-level A-B runs",
     )
     ap.add_argument(
         "--only",
@@ -241,8 +225,7 @@ def main() -> None:
 
     if args.only is not None:
         print(f"running local[{args.only}] ...", file=sys.stderr)
-        partials[args.only] = run_at(args.only, clips_path, ckpt_base, args.sp,
-                                     args.pair_gen, args.rows, args.sizing)
+        partials[args.only] = run_at(args.only, clips_path, ckpt_base, args.sp, args.rows)
         with open(partial_path, "w") as f:
             json.dump(partials, f)
         print(json.dumps(partials[args.only]))
@@ -255,8 +238,7 @@ def main() -> None:
             results[cores] = partials[cores]
             continue
         print(f"running local[{cores}] ...", file=sys.stderr)
-        results[cores] = run_at(cores, clips_path, ckpt_base, args.sp, args.pair_gen,
-                                args.rows, args.sizing)
+        results[cores] = run_at(cores, clips_path, ckpt_base, args.sp, args.rows)
         print(f"  {results[cores]}", file=sys.stderr)
 
     lo, hi = results[args.low], results[args.high]

@@ -60,7 +60,7 @@ try:
         d = json.load(open(m))
         walls[_os.path.basename(_os.path.dirname(m))] = round(d.get("wall_sec", 0.0), 1)
     metrics = [m for m in pipe.store.metrics()
-               if m["metric"] in ("band_stats", "lsh_hot_band_groups",
+               if m["metric"] in ("lsh_hot_band_groups",
                                    "lsh_hot_band_rows_starred",
                                    "ungated_pairs_dropped",
                                    "candidate_pairs_rows")]

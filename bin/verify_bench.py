@@ -70,8 +70,7 @@ if not store.is_committed("candidate_pairs"):
     store.write("candidate_pairs",
                 candidate_pairs(bands, band_group_cap=cfg.band_group_cap,
                                 partitions=sp,
-                                max_pairs_per_group=cfg.max_pairs_per_group,
-                                sizing=cfg.sizing))
+                                max_pairs_per_group=cfg.max_pairs_per_group))
 print("PREP_DONE", round(time.time() - t0, 1))
 """
 

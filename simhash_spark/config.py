@@ -13,6 +13,7 @@ the pure-numpy reference encoder (reference.py) and the Spark pandas UDFs
 
 from __future__ import annotations
 
+import os as _os
 from dataclasses import dataclass, field, asdict
 
 # ---------------------------------------------------------------------------
@@ -31,7 +32,7 @@ CHAR_SHINGLE_K = 3
 
 #: MinHash shingling: char k-shingles over the normalized text.
 MINHASH_SHINGLE_K = 5
-#: Number of minhash permutations.
+#: Number of minhash slots (OPH bins).
 NUM_PERM = 128
 #: LSH banding for minhash: BANDS * ROWS == NUM_PERM.
 #: Threshold ~ (1/BANDS)^(1/ROWS) ~ 0.42.
@@ -66,51 +67,17 @@ SUBSTR_MIN_LEN = 64
 GRAM_K = 16
 GRAM_STRIDE = 8
 
-#: Minhash signature scheme.
-#:   "perm128"       — NUM_PERM independent (a*x+b) mod p permutations:
-#:                     O(shingles * NUM_PERM) multiply-add-mod work.
-#:   "oph-densified" — One-Permutation Hashing (Li/Owen/Zhang, NIPS'12):
-#:                     ONE mix per shingle, min per NUM_PERM hash-space
-#:                     bins, empty bins filled from the next non-empty
-#:                     bin circularly (densified OPH, Shrivastava &
-#:                     Li ICML'14): O(shingles) total — the kernel's
-#:                     perm-min loop was 14.7 s of the 17.4 s bands
-#:                     kernel per 50k rows, and OPH removes the x128.
-#: Default is oph-densified: the interleaved pipeline-level A/B at
-#: 2M rows / local[8] (BENCH/ab-minhash-scheme-t8-n2000000.json) put it
-#: 17.5% ahead end-to-end (355.0 vs 430.2 s mean of 2 legs each) with
-#: the bands stage halved (51-56 vs 106-111 s) and candidate_pairs /
-#: verify flat — i.e. no candidate blowup from the scheme flip.
-#: Env-overridable (not just a constant) because pandas-UDF workers are
-#: separate processes: subprocess A/B legs select the scheme at launch.
-#: Signature values differ between schemes, so the scheme is part of
-#: SEMANTICS (checkpoints refuse to resume across a switch) and golden
-#: vectors regenerate on a default flip (bin/regen_golden.py).
-import os as _os
-
-MINHASH_SCHEME = _os.environ.get("SPARK_GRAFT_MINHASH_SCHEME", "oph-densified")
-
-#: Bands-stage kernel SHAPE (values bit-identical either way — an
-#: EXECUTION knob, not semantics; pytest-pinned parity):
-#:   "arrow"  — mapInArrow emits pre-exploded (id, bkey) rows straight
-#:              from the kernel's flat (values, counts) output: no
-#:              pandas Series-of-lists, no Arrow LargeList assembly, no
-#:              JVM explode (VERDICT r4 #5).
-#:   "pandas" — ArrayType pandas UDF + JVM explode (the r4 shape).
-#: Env-selectable for subprocess A/B legs like MINHASH_SCHEME.
-BANDS_KERNEL = _os.environ.get("SPARK_GRAFT_BANDS_KERNEL", "arrow")
-
-#: Storage level for candidate_pairs' persisted annotated-band table —
-#: an EXECUTION knob (pair multiset identical across modes, pytest-
-#: pinned), env-selectable for subprocess A/B legs like MINHASH_SCHEME:
-#:   'memdisk' — MEMORY_AND_DISK_DESER (DataFrame.persist() default);
-#:   'ser'     — MEMORY_AND_DISK serialized (smaller heap footprint);
-#:   'disk'    — DISK_ONLY (no unified-memory tug-of-war between the
-#:               cache and the pair-dedupe agg's execution memory — the
-#:               isolated cp-stage diagnosis of the T8 high mode);
-#:   'none'    — no persist (the bkey Exchange is still reused across
-#:               the cold/hot branches; only the window pass recomputes).
-ANNOT_STORAGE = _os.environ.get("SPARK_GRAFT_ANNOT_STORAGE", "memdisk")
+#: Minhash signature scheme: One-Permutation Hashing (Li/Owen/Zhang,
+#: NIPS'12) — ONE mix per shingle, min per NUM_PERM hash-space bins,
+#: empty bins filled from the next non-empty bin circularly (densified
+#: OPH, Shrivastava & Li ICML'14): O(shingles) total. It replaced
+#: NUM_PERM independent (a*x+b) mod p permutations after the interleaved
+#: pipeline-level A/B at 2M rows / local[8]
+#: (BENCH/ab-minhash-scheme-t8-n2000000.json) put it 17.5% ahead
+#: end-to-end (355.0 vs 430.2 s) with the bands stage halved and
+#: candidate_pairs / verify flat. Part of SEMANTICS, so checkpoints and
+#: golden vectors record it.
+MINHASH_SCHEME = "oph-densified"
 
 #: Verify-stage texts prefilter: 'full' (default) joins the whole
 #: profile texts table into both pair branches; 'semi' first left-semi-
@@ -122,28 +89,33 @@ ANNOT_STORAGE = _os.environ.get("SPARK_GRAFT_ANNOT_STORAGE", "memdisk")
 #: with the survivor frame persisted: at bench scale the extra
 #: distinct + semi pass over texts costs more than the 4 text shuffles
 #: it shrinks. The crossover favors 'semi' when texts stop fitting the
-#: shuffle tier (corpus >> candidates), so it stays env-selectable for
-#: cluster runs. EXECUTION knob — the verified output is identical by
-#: construction (every surviving pair's ids are in the filter set;
-#: pytest-pinned semi==full).
+#: shuffle tier (corpus >> candidates), which no bench-scale run
+#: reaches, so cluster deployments pick it by env. EXECUTION knob — the
+#: verified output is identical by construction (every surviving pair's
+#: ids are in the filter set; pytest-pinned semi==full).
 VERIFY_TEXT_FILTER = _os.environ.get("SPARK_GRAFT_VERIFY_TEXT_FILTER", "full")
 
 #: Row-id encoding of the hot pipeline interior (bands/candidate_pairs
-#: and verify's joins): 'cid' (default — int64 xxhash64(clip_id),
-#: mapped back to clip_id strings at verify's output) or 'clip_id'
-#: (legacy string keys end-to-end). Env-selectable so interleaved
-#: same-session A/B legs can replay the string engine; SEMANTICS pins
-#: the choice, so checkpoints refuse to resume across a switch.
+#: and verify's joins), also the name of the id column the band table
+#: carries: 'cid' (default — int64 xxhash64(clip_id), mapped back to
+#: clip_id strings at verify's output) or 'clip_id' (string keys
+#: end-to-end). 'clip_id' is the remediation verify's cid-collision
+#: guard names, so it is the only path that runs on a colliding corpus.
+#: SEMANTICS pins the choice, so checkpoints refuse to resume across a
+#: switch.
 ID_KEY = _os.environ.get("SPARK_GRAFT_ID_KEY", "cid")
+if ID_KEY not in ("cid", "clip_id"):
+    raise ValueError(f"SPARK_GRAFT_ID_KEY must be 'cid' or 'clip_id', got {ID_KEY!r}")
 
-#: Prime modulus for minhash universal hashing (Mersenne 2^31-1: products of
-#: two <2^31 values fit in uint64 — vectorizes without 128-bit arithmetic).
+#: Prime modulus of shingle ids and minhash values (Mersenne 2^31-1).
 MINHASH_PRIME = (1 << 31) - 1
 #: Value assigned to every minhash slot of an EMPTY shingle set (never
 #: produced by the hash itself since hashes are < MINHASH_PRIME).
 MINHASH_EMPTY = MINHASH_PRIME
 
-#: RNG seed for the minhash permutation parameters (a_i, b_i).
+#: RNG seed of the retired per-permutation (a_i, b_i) parameters. OPH
+#: does not read it; it stays in SEMANTICS so existing checkpoints and
+#: golden vectors keep their fingerprint.
 MINHASH_SEED = 0x51_AB_5EED
 
 #: Personalization prefix for the stable 64-bit feature hash (blake2b) —
@@ -200,21 +172,6 @@ class EngineConfig:
     #: granularity; diverted groups are logged to _metrics (no silent
     #: truncation). None disables the pair-count cap.
     max_pairs_per_group: int | None = None
-    #: Cold-path pairwise expansion in candidate_pairs: 'join'
-    #: (sort-merge self-join on bkey) or 'agg' (one aggregation pass +
-    #: double explode). A 2x2 interleaved pipeline A/B at 32 cores is a
-    #: tie inside host noise and 'join' wins at 8 cores
-    #: (BENCH/pipeline-ab-pairgen-t32-n2000000.json, cp-stage-*.json).
-    pair_gen: str = "join"
-    #: How candidate_pairs learns each band group's size/hub: 'window'
-    #: (count/min OVER (PARTITION BY bkey) — one sorted pass, no join;
-    #: default) or 'join' (groupBy sizes + SMJ back onto the band table).
-    #: Interleaved fresh-JVM A/B at 2M rows / sp=128
-    #: (BENCH/cp-stage-n2000000-winab-sp128.json): window 237/212 s vs
-    #: join 714/363 s at 8 cores (2.4x, and the join mode's bimodal high
-    #: tail disappears); 328/212 vs 353/247 s at 32. Identical pair
-    #: multisets pytest-pinned.
-    sizing: str = "window"
     #: Connected-components max iterations (safety guard; the loop stops on
     #: convergence well before this for realistic dup-cluster diameters).
     cc_max_iters: int = 50
@@ -224,8 +181,10 @@ class EngineConfig:
     cc_checkpoint_every: int = 5
     #: Arrow batch size for pandas UDFs.
     arrow_batch: int = 10_000
-    #: Log per-detector band statistics (row counts + approx distinct
-    #: band hashes) to _metrics after the bands stage.
+    #: Log candidate_pairs' hot-band star diversion (lsh_hot_band_groups /
+    #: lsh_hot_band_rows_starred) and ungated-pair drop, plus CC's round
+    #: counters, to _metrics. The candidate_pairs metrics ride the stage's
+    #: own materialization pass (Observations), so they cost no extra job.
     collect_stats: bool = True
     #: Which detectors to run.
     detectors: tuple = ("simhash", "minhash", "substring")
@@ -267,6 +226,6 @@ SEMANTICS = {
     # cid = xxhash64(clip_id) int64, mapped back to clip_id strings at
     # the verified_pairs boundary. Checkpoints written under the string-
     # keyed interior refuse to resume (profile lacks cid, pairs carry
-    # strings). Tracks the ID_KEY env knob (A/B replays).
+    # strings). Tracks the ID_KEY env knob.
     "id_key": "cid-xxhash64" if ID_KEY == "cid" else "legacy-string",
 }

@@ -78,29 +78,19 @@ def minhash_bands_udf(norm: pd.Series) -> pd.Series:
     return pd.Series(list(R.minhash_band_hashes(sigs)))
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def mh_gram_bkeys_udf(norm: pd.Series) -> pd.Series:
-    """FUSED minhash-band + gram detector: PACKED int64 band keys
-    (lsh bkey layout) for both detectors in ONE Arrow crossing — the
-    bands stage's two Python evals over the same text become one, and
-    the kernel shares a single flatten/prefix pass (reference.py
-    mh_gram_bkeys_batch)."""
-    return pd.Series(R.mh_gram_bkeys_batch(norm.fillna("").tolist()))
-
-
 def mh_gram_bkeys_exploded(
     df, id_col: str = "cid", text_col: str = "norm_text"
 ):
     """FUSED minhash-band + gram detector as a ``mapInArrow`` operator:
-    (id, norm_text) -> PRE-EXPLODED (id, bkey) rows.
+    (id, norm_text) -> PRE-EXPLODED (id, bkey) rows carrying PACKED
+    int64 band keys (lsh bkey layout) for both detectors.
 
-    vs the pandas-UDF + JVM explode shape (mh_gram_bkeys_udf): the
-    kernel's flat (values, counts) output becomes the Arrow column
-    DIRECTLY — no pandas Series-of-lists materialization (one Python
-    list + ndarray per row), no Arrow LargeList assembly, no JVM
-    generate/explode; ids replicate via one Arrow take. Values are
-    bit-identical (same reference.mh_gram_bkeys kernel; pytest-pinned
-    against the list form)."""
+    One Arrow crossing serves both detectors, and the kernel shares a
+    single flatten/prefix pass (reference.mh_gram_bkeys_flat_batch).
+    Its flat (values, counts) output becomes the Arrow column DIRECTLY
+    — no pandas Series-of-lists, no Arrow LargeList assembly, no JVM
+    generate/explode; ids replicate via one Arrow take. The packing is
+    pytest-pinned against lsh._pack_bkey's JVM shifts."""
     import numpy as np
     import pyarrow as pa
 

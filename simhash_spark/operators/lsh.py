@@ -29,12 +29,13 @@ Scale design (the part that must survive 10^12 rows):
 - Pair generation is an equi self-join on bkey —
   sort-merge under AQE with skew-join splitting enabled.
 - A single pathological band key still yields O(n^2) pairs no matter how
-  AQE splits partitions, so band GROUPS are sized first with a cheap
-  map-side-combinable groupBy().count(); groups over ``band_group_cap``
-  are diverted: the ``exact`` detector always emits linear STAR edges
-  (hub = min clip_id — identical text is transitively duplicate, so no
-  pairwise loss), and hot sim/mh/gram groups emit star edges too
-  (approximation, counts logged to _metrics — no silent truncation).
+  AQE splits partitions, so band GROUPS are sized first with window
+  count/min aggregates over the bkey partitioning (one sorted pass, no
+  join); groups over ``band_group_cap`` are diverted: the ``exact``
+  detector always emits linear STAR edges (hub = min clip_id —
+  identical text is transitively duplicate, so no pairwise loss), and
+  hot sim/mh/gram groups emit star edges too (approximation, counts
+  logged to _metrics — no silent truncation).
 - Pair dedupe also counts per-detector band hits (mh_hits/gram_hits) and
   flags star edges — verify uses these as free LSH-evidence gates so the
   Python tier only sees pairs that can plausibly pass.
@@ -45,34 +46,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from simhash_spark import config as C
 from simhash_spark.functions.signatures import (
-    mh_gram_bkeys_udf,
+    mh_gram_bkeys_exploded,
     minhash_bands_udf,
     simhash_table_key_cols,
     substring_grams_udf,
 )
-from simhash_spark.util import track_persisted
-
-
-def _persist_annotated(df: DataFrame) -> tuple[DataFrame, list]:
-    """Persist the annotated band table per config.ANNOT_STORAGE.
-
-    Returns (df, handles-to-release). 'none' skips the persist entirely —
-    correctness is unaffected (the bkey Exchange is reused across the
-    cold/hot consumer branches; only the sizing pass recomputes)."""
-    mode = C.ANNOT_STORAGE
-    if mode == "none":
-        return df, []
-    from pyspark import StorageLevel
-
-    lvl = {
-        "memdisk": StorageLevel.MEMORY_AND_DISK_DESER,
-        "ser": StorageLevel.MEMORY_AND_DISK,
-        "disk": StorageLevel.DISK_ONLY,
-    }[mode]
-    df = df.persist(lvl)
-    return df, [df]
+from simhash_spark.util import defer_metric, track_persisted
 
 
 #: detector names in det_id order (bkey bits 62..63); the order IS the
@@ -112,9 +92,9 @@ def build_bands(
 
     ``id_col`` names the row-id column the band table carries: 'cid'
     (default — the int64 xxhash64(clip_id) interior key; derived in
-    place when the input only has clip_id) or 'clip_id' (legacy string
-    path, used by the incremental/streaming dedup whose state tables
-    are string-keyed)."""
+    place when the input only has clip_id) or 'clip_id' (the string
+    path: config.ID_KEY's collision remediation, and the incremental/
+    streaming dedup whose state tables are string-keyed)."""
     if id_col == "cid" and "cid" not in normalized.columns:
         normalized = normalized.withColumn("cid", F.xxhash64("clip_id"))
     if id_col == "cid" and "cid" not in signatures.columns:
@@ -142,26 +122,14 @@ def build_bands(
     if "minhash" in detectors and "substring" in detectors:
         # FUSED kernel (VERDICT r3 #3): one Arrow crossing emits
         # PRE-PACKED bkeys for both detectors; the kernel shares a single
-        # flatten/prefix pass (reference.mh_gram_bkeys_batch) and the
-        # packing layout is pytest-pinned against _pack_bkey.
-        # Default shape is mapInArrow emitting PRE-EXPLODED (id, bkey)
+        # flatten/prefix pass and the packing layout is pytest-pinned
+        # against _pack_bkey. mapInArrow emits PRE-EXPLODED (id, bkey)
         # rows straight from the kernel's flat output — no pandas
         # Series-of-lists, no Arrow LargeList, no JVM explode (VERDICT
-        # r4 #5; values bit-identical, pytest-pinned; interleaved A/B at
-        # 2M/T8, BENCH/ab-bands-kernel-t8-n2000000.json: bands commit
-        # 31.5 -> 28.4 s, -10%, pipeline -1.6%, both legs consistent).
-        # The pandas-UDF + explode form stays env-selectable for A/B
-        # replays.
-        if C.BANDS_KERNEL == "arrow":
-            from simhash_spark.functions.signatures import mh_gram_bkeys_exploded
-
-            parts.append(mh_gram_bkeys_exploded(normalized, id_col=id_col))
-        else:
-            parts.append(
-                normalized.select(
-                    id_col, F.explode(mh_gram_bkeys_udf("norm_text")).alias("bkey")
-                )
-            )
+        # r4 #5; interleaved A/B at 2M/T8 against the ArrayType UDF +
+        # explode shape, BENCH/ab-bands-kernel-t8-n2000000.json: bands
+        # commit 31.5 -> 28.4 s, -10%, pipeline -1.6%).
+        parts.append(mh_gram_bkeys_exploded(normalized, id_col=id_col))
     elif "minhash" in detectors:
         mh = normalized.select(
             id_col,
@@ -191,15 +159,12 @@ def candidate_pairs(
     metrics_sink=None,
     gate: bool = True,
     gram_hits_min: int = 2,
-    pair_gen: str = "join",
-    sizing: str = "window",
-    stats: str = "auto",
 ) -> DataFrame:
     """bands -> candidate_pairs(a, b, det) with a < b, deduplicated.
 
     ``partitions`` sets the EXPLICIT hash-partitioning on the band keys
-    (north_rule: explicit partition counts): the sizing aggregation, the
-    annotate join and the self-join all reuse the one Exchange.
+    (north_rule: explicit partition counts): the group-sizing window and
+    the self-join both reuse the one Exchange.
     ``max_pairs_per_group`` caps the pairs a single band group may emit:
     groups whose n*(n-1)/2 exceeds it are diverted to linear star edges
     (same mechanism as ``band_group_cap``, expressed in pairs instead of
@@ -219,110 +184,51 @@ def candidate_pairs(
     same gates, so a sig-less caller that gates differently (pass
     ``gate=False``) gets identical final semantics.
 
-    ``pair_gen`` picks the cold-path pairwise expansion:
-      'join' (default) — sort-merge self-join on bkey.
-      'agg'  — groupBy(bkey) + sorted collect_set + a double explode
-             (posexplode of the id array, then explode of its tail
-             slice). ONE pass over the cold rows, no sort, no join; the
-             aggregation buffer is bounded by ``band_group_cap`` ids
-             (16 KB at the default 2000) because over-cap groups were
-             already diverted to star edges — the unbounded-group OOM
-             hazard that rules out a naive collect_list over raw bands
-             cannot occur here.
-    ``sizing`` picks how each band row learns its group's size and hub:
-      'window' (default) — count(*)/min(id) OVER (PARTITION BY
-             bkey): ONE sorted pass over the pre-partitioned band table
-             computes both annotations in place; no join, no second
-             sort, and the sizing aggregation is built only when a
-             metrics_sink actually needs the per-detector stats. Hot
-             groups buffer in WindowExec's external sorter (spills)
-             exactly like the SMJ sort buffer they replace. Interleaved
-             fresh-JVM A/B at 2M rows / sp=128
-             (BENCH/cp-stage-n2000000-winab-sp128.json): 237/212 s vs
-             join's 714/363 s at 8 cores — 2.4x, with the join mode's
-             bimodal high tail gone — and 328/212 vs 353/247 s at 32.
-      'join' — groupBy(bkey).count/min, then an equi-join of the sizes
-             back onto the band table. Both sides share the bkey
-             hash-partitioning, so the join adds NO exchange — but it
-             is a SortMergeJoin, i.e. a full sort of the engine's
-             biggest table plus a sort of the sizes, plus the separate
-             hash aggregation that produced them.
-    ``stats`` picks how metrics_sink's band accounting is computed
-    (r6 optimization — guide §1.2 "don't compute things you throw away"):
-      'deferred' — the hot-band star-diversion accounting
-             (lsh_hot_band_groups / lsh_hot_band_rows_starred — the
-             no-silent-truncation contract) rides the caller's
-             materialization pass for FREE via an Observation on the
-             star branch (each hot group emits grp_n-1 edges carrying
-             grp_n, so #groups = sum 1/(grp_n-1) and #rows = #groups +
-             #edges — exact integers after rounding). No separate job.
-             The per-detector band_stats table (rows/distinct hashes
-             per det) is NOT emitted in this mode: computing it needs
-             its own pass over the band table (measured ~1.2 s/run at
-             sf0.1, a full second pass at 2M rows).
-      'eager' — the legacy shape: a groupBy(bkey) aggregation over the
-             band table collected BEFORE pair generation, emitting the
-             full per-detector band_stats table plus the hot accounting.
-      'auto' — 'deferred' under 'window' sizing (the default pipeline
-             shape), 'eager' under 'join' sizing (where the sizes
-             aggregation is part of the plan anyway).
-    All modes emit the identical (a < b) pair multiset — pytest-pinned.
-    Measured at 2M rows (BENCH/cp-stage-n2000000.json,
-    BENCH/pipeline-ab-pairgen-t32-n2000000.json): at 8 cores 'join' wins
-    both isolated runs (233 s vs 272/312 s); at 32 cores a 2x2
-    interleaved pipeline-level A/B is a tie inside host noise (join
-    280/390 s vs agg 368/295 s total wall) — the one isolated run where
-    'agg' led 124 s to 223 s did not reproduce. 'join' stays the default;
-    'agg' remains the documented alternative for engines where the sort
-    is the measured bottleneck.
+    Each band row learns its group's size and hub from count(*)/min(id)
+    OVER (PARTITION BY bkey): ONE sorted pass over the pre-partitioned
+    band table, no join and no second sort. Hot groups buffer in
+    WindowExec's external sorter (spills) like an SMJ sort buffer would.
+    Interleaved fresh-JVM A/B at 2M rows / sp=128 against a groupBy +
+    join-back sizing (BENCH/cp-stage-n2000000-winab-sp128.json): 237/212
+    s vs 714/363 s at 8 cores. Cold groups then expand pairwise through
+    a sort-merge self-join on bkey, which held against a collect_set +
+    double-explode expansion (BENCH/pipeline-ab-pairgen-t32-n2000000.json,
+    BENCH/cp-stage-n2000000.json).
+
+    The hot-band star-diversion accounting (lsh_hot_band_groups /
+    lsh_hot_band_rows_starred — the no-silent-truncation contract) rides
+    the caller's materialization pass for free, as exact integer counts
+    of an Observation on the star branch; see the inline comment.
     """
+    from pyspark import StorageLevel
+    from pyspark.sql import Observation, Window
+
     spark = bands.sparkSession
     n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     # row-id column: 'cid' (int64 interior key, the default bands layout)
-    # or 'clip_id' (legacy string bands) — whatever build_bands emitted.
+    # or 'clip_id' (string bands) — whatever build_bands emitted.
     rid = [c for c in bands.columns if c != "bkey"][0]
     # EXPLICIT co-partitioning on the band keys: every downstream keyed op
-    # (sizing groupBy, annotate join, pairwise self-join) sees
-    # HashPartitioning(_KEYS, n_part) and reuses this single shuffle.
+    # (sizing window, pairwise self-join) sees HashPartitioning(_KEYS,
+    # n_part) and reuses this single shuffle.
     bands = bands.repartition(n_part, *_KEYS)
 
-    if stats == "auto":
-        stats = "deferred" if sizing == "window" else "eager"
-
-    # One partial-aggregable pass sizes every band group and picks its hub
-    # (map-side combine keeps hot keys linear — one row per key per mapper).
-    # Lazy: in 'window' sizing this is evaluated ONLY for the eager-stats
-    # block (the deferred default never computes it).
-    counts = bands.groupBy(*_KEYS).agg(
-        F.count("*").alias("grp_n"), F.min(rid).alias("hub")
-    )
-
-    if sizing == "window":
-        # grp_n/hub as window aggregates over the existing bkey hash-
-        # partitioning: ClusteredDistribution(bkey) is already satisfied,
-        # so the plan is Sort(bkey) + WindowExec — one sorted pass, no
-        # join. Groups of size 1 produce no pairs — dropped in place.
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*_KEYS)
-        annotated, _handles = _persist_annotated(
-            bands.select(
-                *_KEYS,
-                rid,
-                F.count(F.lit(1)).over(w).alias("grp_n"),
-                F.min(rid).over(w).alias("hub"),
-            ).filter(F.col("grp_n") >= 2)
+    # grp_n/hub as window aggregates over the existing bkey hash-
+    # partitioning: ClusteredDistribution(bkey) is already satisfied, so
+    # the plan is Sort(bkey) + WindowExec. Groups of size 1 produce no
+    # pairs — dropped in place. PERSIST: the cold and star branches both
+    # consume it.
+    w = Window.partitionBy(*_KEYS)
+    annotated = (
+        bands.select(
+            *_KEYS,
+            rid,
+            F.count(F.lit(1)).over(w).alias("grp_n"),
+            F.min(rid).over(w).alias("hub"),
         )
-    else:
-        # Groups of size 1 produce no pairs — drop their rows before any
-        # join (the vast majority of band rows at realistic dup rates).
-        multi = counts.filter(F.col("grp_n") >= 2)
-        # Attach grp_n/hub: plain shuffle equi-join (NOT broadcast —
-        # `multi` can be billions of keys at 10^12 rows); AQE handles
-        # skew. PERSIST: three consumers (metrics agg, cold self-join x2
-        # branches, star filter) would otherwise re-run the join per
-        # branch.
-        annotated, _handles = _persist_annotated(bands.join(multi, _KEYS, "inner"))
+        .filter(F.col("grp_n") >= 2)
+        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    )
 
     # a group is diverted to star edges if its ROW count exceeds
     # band_group_cap or its implied PAIR count n*(n-1)/2 exceeds
@@ -333,105 +239,49 @@ def candidate_pairs(
         over_cap = over_cap | (
             F.col("grp_n") * (F.col("grp_n") - 1) / 2 > max_pairs_per_group
         )
-
-    if metrics_sink is not None and stats == "eager":
-        # one pass over the per-key sizes yields band stats AND hot-band
-        # diagnostics (exact distinct-hash counts — no extra bands scan).
-        is_hot = over_cap & (det_id_col("bkey") != 0)
-        stat_rows = counts.withColumn("det", det_name_col("bkey")).groupBy("det").agg(
-            F.sum("grp_n").alias("rows"),
-            F.count("*").alias("distinct_hashes"),
-            F.sum(F.when(is_hot, 1).otherwise(0)).alias("hot_groups"),
-            F.sum(F.when(is_hot, F.col("grp_n")).otherwise(0)).alias("hot_rows"),
-        ).collect()
-        for r in stat_rows:
-            metrics_sink(
-                "band_stats",
-                int(r["rows"]),
-                det=r["det"],
-                distinct_hashes=int(r["distinct_hashes"]),
-                hot_groups=int(r["hot_groups"]),
-                hot_rows_starred=int(r["hot_rows"]),
-                cap=band_group_cap,
-            )
-        metrics_sink(
-            "lsh_hot_band_groups",
-            sum(int(r["hot_groups"]) for r in stat_rows),
-            cap=band_group_cap,
-        )
-        metrics_sink(
-            "lsh_hot_band_rows_starred",
-            sum(int(r["hot_rows"]) for r in stat_rows),
-            band_group_cap=band_group_cap,
-            max_pairs_per_group=max_pairs_per_group,
-        )
-
     is_star = over_cap | (det_id_col("bkey") == 0)
 
     # cold path: full pairwise within group (group size <= cap bounds the
     # worst group at cap^2/2 pairs). det travels as the 2-bit id packed
     # in bkey — no extra column.
     cold_bands = annotated.filter(~is_star).select(*_KEYS, rid)
-    if pair_gen == "agg":
-        # docstring 'agg' mode: one aggregation pass (no exchange — the
-        # rows are already hash-partitioned on bkey) + streamed double
-        # explode. sort_array makes ascending order a structural
-        # invariant, so pos < tail-slice position IS a < b; collect_set
-        # (vs _list) guards the degenerate same-clip-same-bkey row.
-        grp = cold_bands.groupBy(*_KEYS).agg(
-            F.sort_array(F.collect_set(rid)).alias("ids")
-        )
-        left = grp.select(
-            *_KEYS, "ids", F.posexplode("ids").alias("pos", "a")
-        )
-        pairs_cold = left.select(
-            F.col("a"),
-            F.explode(
-                F.slice("ids", F.col("pos") + 2, F.size("ids") - F.col("pos") - 1)
-            ).alias("b"),
+    a = cold_bands.alias("a")
+    b = cold_bands.alias("b")
+    pairs_cold = (
+        a.join(b, _KEYS, "inner")
+        .where(F.col(f"a.{rid}") < F.col(f"b.{rid}"))
+        .select(
+            F.col(f"a.{rid}").alias("a"),
+            F.col(f"b.{rid}").alias("b"),
             det_id_col("bkey").alias("det_id"),
             F.lit(0).alias("starred"),
         )
-    else:
-        a = cold_bands.alias("a")
-        b = cold_bands.alias("b")
-        pairs_cold = (
-            a.join(b, _KEYS, "inner")
-            .where(F.col(f"a.{rid}") < F.col(f"b.{rid}"))
-            .select(
-                F.col(f"a.{rid}").alias("a"),
-                F.col(f"b.{rid}").alias("b"),
-                det_id_col("bkey").alias("det_id"),
-                F.lit(0).alias("starred"),
-            )
-        )
+    )
 
     # star path (exact groups of any size + over-cap sim/mh/gram groups):
     # linear edges to the group's min id. For 'exact' this is lossless
     # (identical text is transitively dup); for over-cap groups it is the
     # logged approximation that avoids O(n^2).
-    star_edges = annotated.filter(is_star).where(F.col(rid) != F.col("hub"))
+    star_rows = annotated.filter(is_star)
     hot_obs = None
-    if metrics_sink is not None and stats == "deferred":
-        # free hot-band accounting (docstring 'deferred'): each over-cap
-        # group emits grp_n-1 star edges, every edge carrying grp_n, so
-        # #hot_groups = sum 1/(grp_n-1) and #hot_rows = #groups + #edges
-        # — observed on the single-consumer star branch (above the
-        # annotated cache, so cache-population races can't double-fire)
-        # and flushed by whoever materializes the pairs
+    if metrics_sink is not None:
+        # hot-band accounting as exact integer counts over the star rows
+        # BEFORE the hub filter: a non-exact star row belongs to an
+        # over-cap group, and each such group has exactly one row whose
+        # id is its hub. Observed on the single-consumer star branch
+        # (above the annotated cache, so cache-population races can't
+        # double-fire) and flushed by whoever materializes the pairs
         # (CheckpointStore.write / util.flush_deferred_metrics).
-        from pyspark.sql import Observation
-
-        is_hot_row = det_id_col("bkey") != 0  # non-exact stars ARE over-cap
+        is_hot_row = det_id_col("bkey") != 0
         hot_obs = Observation()
-        star_edges = star_edges.observe(
+        star_rows = star_rows.observe(
             hot_obs,
-            F.sum(F.when(is_hot_row, 1).otherwise(0)).alias("hot_edges"),
-            F.sum(
-                F.when(is_hot_row, F.lit(1.0) / (F.col("grp_n") - 1)).otherwise(0.0)
-            ).alias("hot_grp_frac"),
+            F.count(F.when(is_hot_row, 1)).alias("hot_rows"),
+            F.count(F.when(is_hot_row & (F.col(rid) == F.col("hub")), 1)).alias(
+                "hot_groups"
+            ),
         )
-    pairs_hot = star_edges.select(
+    pairs_hot = star_rows.where(F.col(rid) != F.col("hub")).select(
         F.col("hub").alias("a"),
         F.col(rid).alias("b"),
         det_id_col("bkey").alias("det_id"),
@@ -479,10 +329,6 @@ def candidate_pairs(
             # DEFERRED until an action runs; CheckpointStore.write (or
             # any direct consumer via util.flush_deferred_metrics)
             # flushes it after the stage is materialized.
-            from pyspark.sql import Observation
-
-            from simhash_spark.util import defer_metric
-
             obs = Observation()
             pairs = pairs.observe(
                 obs, F.sum(F.when(~can_verify, 1).otherwise(0)).alias("dropped")
@@ -498,29 +344,27 @@ def candidate_pairs(
         else:
             pairs = pairs.filter(can_verify)
     if hot_obs is not None:
-        from simhash_spark.util import defer_metric
 
         def _emit_hot(_v, obs=hot_obs):
             try:
                 m = obs.get
-                groups = int(round(m["hot_grp_frac"] or 0.0))
-                edges = int(m["hot_edges"] or 0)
+                groups, rows = int(m["hot_groups"]), int(m["hot_rows"])
             except Exception:
                 # observation pruned => the star branch was runtime-empty,
                 # and an empty star branch means no over-cap group exists
-                # (every hot group has >= 2 rows, so it always emits at
-                # least one star edge): 0 is the exact answer.
-                groups = edges = 0
+                # (every group that reaches it has >= 2 rows): 0 is the
+                # exact answer.
+                groups = rows = 0
             metrics_sink("lsh_hot_band_groups", groups, cap=band_group_cap)
             metrics_sink(
                 "lsh_hot_band_rows_starred",
-                groups + edges,
+                rows,
                 band_group_cap=band_group_cap,
                 max_pairs_per_group=max_pairs_per_group,
             )
 
-        pairs = defer_metric(pairs, hot_obs, "hot_edges", _emit_hot)
+        pairs = defer_metric(pairs, hot_obs, "hot_rows", _emit_hot)
     # `annotated` stays cached until the caller materializes `pairs`
     # (CheckpointStore.write releases it — no executor-storage leak in a
     # long-lived driver).
-    return track_persisted(pairs, _handles)
+    return track_persisted(pairs, [annotated])

@@ -223,7 +223,7 @@ def verify_pairs(
         # silently corrupting output. Cost: one exchange of (8B cid,
         # clip_id) — ~0.5% of the pipeline's shuffle bytes at 8M rows —
         # and the count/min aggregate is map-side-combined. Remediation
-        # is named in the error: SPARK_GRAFT_ID_KEY=string falls back to
+        # is named in the error: SPARK_GRAFT_ID_KEY=clip_id falls back to
         # the collision-free string-keyed interior.
         m = (
             profile.select("cid", "clip_id")
@@ -244,7 +244,7 @@ def verify_pairs(
                             F.col("_n").cast("string"),
                             F.lit(
                                 " clip_ids; rerun with "
-                                "SPARK_GRAFT_ID_KEY=string "
+                                "SPARK_GRAFT_ID_KEY=clip_id "
                                 "(collision-free string-keyed interior)"
                             ),
                         )

@@ -15,9 +15,10 @@ vs the string-keyed engine (BENCH/ab-id-key-t8-n2000000.json, 2M rows,
 T8) measured candidate_pairs -20..42%%, verify -26%%, whole pipeline
 -12%% (profile/bands flat); verify maps back to clip_id strings at its
 output boundary, so the two user-facing tables (verified_pairs,
-clusters) keep string ids. The legacy string path stays selectable via
-SPARK_GRAFT_ID_KEY=clip_id (semantics-pinned; used by the A/B legs and
-by the string-keyed incremental state tables).
+clusters) keep string ids. SPARK_GRAFT_ID_KEY=clip_id runs the string-
+keyed interior instead (semantics-pinned): it is the remediation verify's
+cid-collision guard names, and the incremental state tables are
+string-keyed.
 
 ``profile`` fuses normalization and the simhash signature into ONE stage
 table: one Arrow pass over the corpus, and verify joins a single side
@@ -125,9 +126,6 @@ class DedupPipeline:
             )
             store.write("bands", bands)
         bands = store.read("bands")
-        # per-detector band stats (rows, exact distinct hashes, hot groups)
-        # are emitted by candidate_pairs from its sizing aggregation — no
-        # separate bands scan needed.
 
         if not store.is_committed("candidate_pairs"):
             pairs = candidate_pairs(
@@ -136,8 +134,6 @@ class DedupPipeline:
                 partitions=n_part,
                 max_pairs_per_group=cfg.max_pairs_per_group,
                 metrics_sink=sink,
-                pair_gen=cfg.pair_gen,
-                sizing=cfg.sizing,
             )
             store.write("candidate_pairs", pairs)
         pairs = store.read("candidate_pairs")

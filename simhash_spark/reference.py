@@ -388,18 +388,8 @@ def simhash64(text: str | None) -> int:
 
 
 # ---------------------------------------------------------------------------
-# MinHash (NUM_PERM permutations over char-5-shingle ids)
+# MinHash (densified one-permutation hashing over char-5-shingle ids)
 # ---------------------------------------------------------------------------
-
-
-def _perm_params() -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.Generator(np.random.PCG64(C.MINHASH_SEED))
-    a = rng.integers(1, C.MINHASH_PRIME, size=C.NUM_PERM, dtype=np.uint64)
-    b = rng.integers(0, C.MINHASH_PRIME, size=C.NUM_PERM, dtype=np.uint64)
-    return a, b
-
-
-_PERM_A, _PERM_B = _perm_params()
 
 _P31 = np.uint64(C.MINHASH_PRIME)
 
@@ -495,40 +485,30 @@ def minhash_from_norm(norms: Sequence[str]) -> np.ndarray:
     """(n, NUM_PERM) int64 minhash signatures for ALREADY-normalized
     texts. Empty shingle set -> all-MINHASH_EMPTY row.
 
-    Under OPH the dedup is skipped (min-per-bin is multiset-insensitive;
-    values pytest-pinned identical) — the lexsort was the batch's top
-    cost. perm128 keeps it (its kernel pays per-shingle×NUM_PERM)."""
-    rs, x, starts = _row_distinct_shingle_ids(
-        norms, distinct=C.MINHASH_SCHEME != "oph-densified"
-    )
-    return _minhash_from_row_ids(x, starts, len(norms))
-
-
-def _minhash_from_row_ids(x: np.ndarray, starts: np.ndarray, n: int) -> np.ndarray:
-    """Minhash kernel dispatch: per-row DISTINCT shingle ids (flat,
-    row-sorted, ``starts`` len n+1) -> (n, NUM_PERM) int64 signatures.
-    Scheme selected by config.MINHASH_SCHEME (part of SEMANTICS — the
-    two schemes' values are incompatible by construction)."""
-    if C.MINHASH_SCHEME == "oph-densified":
-        return _minhash_oph_densified(x, starts, n)
-    return _minhash_perm128(x, starts, n)
+    The per-row shingle dedup is skipped: min-per-bin is multiset-
+    insensitive (values pytest-pinned identical) and the lexsort was the
+    batch's top cost."""
+    _, x, starts = _row_distinct_shingle_ids(norms, distinct=False)
+    return _minhash_oph_densified(x, starts, len(norms))
 
 
 def _minhash_oph_densified(x: np.ndarray, starts: np.ndarray, n: int) -> np.ndarray:
-    """One-Permutation Hashing with circular densification.
+    """One-Permutation Hashing with circular densification: per-row
+    shingle ids (flat, row-grouped, ``starts`` len n+1; duplicates
+    allowed) -> (n, NUM_PERM) int64 signatures.
 
     ONE splitmix64 avalanche per shingle; bin = top log2(NUM_PERM) bits,
-    value = a disjoint 31-bit slice reduced mod MINHASH_PRIME (keeps the
-    'values < MINHASH_PRIME, sentinel never produced' contract of the
-    perm128 scheme). Per-row min per bin via one np.minimum.at scatter —
-    O(shingles) total vs perm128's O(shingles * NUM_PERM) (A/B'd against
-    sorted-reduceat: scatter 1.7 s vs 8.6 s on a 13M-shingle batch).
+    value = a disjoint 31-bit slice reduced mod MINHASH_PRIME (values
+    stay < MINHASH_PRIME, so the empty-row sentinel is never produced).
+    Per-row min per bin via one np.minimum.at scatter — O(shingles)
+    total (A/B'd against sorted-reduceat: scatter 1.7 s vs 8.6 s on a
+    13M-shingle batch).
     Empty bins (a row with s shingles leaves ~NUM_PERM*exp(-s/NUM_PERM)
     of its bins empty) are filled from the NEXT NON-EMPTY bin to the
     right, circularly — densified OPH (Shrivastava & Li, ICML'14), which
     restores the collision property E[1{h_i(A)=h_i(B)}] = J(A,B) for
     every bin, so downstream banding math is unchanged. Rows with zero
-    shingles stay all-MINHASH_EMPTY (same as perm128)."""
+    shingles stay all-MINHASH_EMPTY."""
     B = C.NUM_PERM
     assert B & (B - 1) == 0, "OPH binning needs power-of-two NUM_PERM"
     out = np.full((n, B), C.MINHASH_EMPTY, dtype=np.int64)
@@ -557,50 +537,6 @@ def _minhash_oph_densified(x: np.ndarray, starts: np.ndarray, n: int) -> np.ndar
 
 _OPH_BIN_SHIFT = np.uint64(64 - int(C.NUM_PERM).bit_length() + 1)  # 57 for 128 bins
 _OPH_EMPTY = np.uint64(0xFFFFFFFFFFFFFFFF)
-
-
-def _minhash_perm128(x: np.ndarray, starts: np.ndarray, n: int) -> np.ndarray:
-    """Perm-min kernel: NUM_PERM independent (a*x+b) mod p permutations."""
-    out = np.full((n, C.NUM_PERM), C.MINHASH_EMPTY, dtype=np.int64)
-    if len(x) == 0:
-        return out
-    # h_j(x) = (a_j * x + b_j) mod p ; a,x < 2^31 so product < 2^62 (no
-    # overflow). A-B'd Mersenne-31 folding against numpy's uint64 mod on
-    # the L2-resident buffer: mod wins — keep the division.
-    nonempty = starts[:-1] < starts[1:]
-    mins = np.empty((n, C.NUM_PERM), dtype=np.uint64)
-    # chunk on row boundaries so reduceat segments never split; one reused
-    # buffer avoids alloc+page-fault churn per chunk. 1k shingles/chunk ->
-    # 1k*128*8B = 1MB working set, L2-resident: measured 4,541 rows/s vs
-    # 1,168 at the old 64MB chunk (the hx buffer is touched 3x per chunk —
-    # multiply, add, mod — so it must LIVE in cache, not stream from DRAM).
-    target = 1_024
-    max_row = int((starts[1:] - starts[:-1]).max())
-    buf = np.empty((max(target, max_row), C.NUM_PERM), dtype=np.uint64)
-    r0 = 0
-    while r0 < n:
-        r1 = r0 + 1
-        while r1 < n and starts[r1 + 1] - starts[r0] <= target:
-            r1 += 1
-        s0, s1 = starts[r0], starts[r1]
-        if s0 == s1:
-            r0 = r1
-            continue
-        xc = x[s0:s1]
-        hx = buf[: len(xc)]
-        np.multiply(xc[:, None], _PERM_A[None, :], out=hx)
-        hx += _PERM_B[None, :]
-        hx %= _P31  # numpy scalar-mod is the fastest exact reduction here
-        # segment boundaries from the chunk's NONEMPTY rows only — an
-        # empty row at the chunk end would otherwise clip the previous
-        # row's segment and drop its last shingle (same reduceat-clipping
-        # bug as _simhash_from_hashed; hypothesis-found).
-        rows_ne = np.nonzero(nonempty[r0:r1])[0]
-        idx = starts[r0:r1][rows_ne] - s0
-        mins[r0 + rows_ne] = np.minimum.reduceat(hx, idx, axis=0)
-        r0 = r1
-    out[nonempty] = mins[nonempty].astype(np.int64)
-    return out
 
 
 def minhash_batch(texts: Iterable[str | None]) -> np.ndarray:
@@ -633,18 +569,13 @@ def minhash_band_hashes(sigs: np.ndarray) -> np.ndarray:
     """(n, NUM_PERM) minhash -> (n, BANDS) int64 band hashes.
     band_hash = mix64(polyhash of the ROWS values + band index).
 
-    Slot layout is scheme-dependent: perm128 bands take ROWS CONSECUTIVE
-    slots (the pinned original layout); oph-densified bands take slots
-    STRIDED BANDS apart ({j, j+32, j+64, j+96}) — densification fills
-    runs of adjacent bins from one donor shingle, so 4 consecutive slots
-    would often hash 1 shingle (band collision prob ~J instead of ~J^4,
-    candidate inflation for sparse rows); striding puts each band's slots
-    32 bins apart, past typical run lengths."""
+    Band j takes the slots STRIDED BANDS apart ({j, j+32, j+64, j+96}):
+    densification fills runs of adjacent bins from one donor shingle, so
+    4 consecutive slots would often hash 1 shingle (band collision prob
+    ~J instead of ~J^4, candidate inflation for sparse rows); striding
+    puts each band's slots 32 bins apart, past typical run lengths."""
     n = sigs.shape[0]
-    if C.MINHASH_SCHEME == "oph-densified":
-        v = sigs.astype(np.uint64).reshape(n, C.ROWS, C.BANDS).transpose(0, 2, 1)
-    else:
-        v = sigs.astype(np.uint64).reshape(n, C.BANDS, C.ROWS)
+    v = sigs.astype(np.uint64).reshape(n, C.ROWS, C.BANDS).transpose(0, 2, 1)
     acc = np.zeros((n, C.BANDS), dtype=np.uint64)
     for r in range(C.ROWS):
         acc = acc * _MIX_MUL + v[:, :, r]
@@ -665,7 +596,7 @@ def mh_gram_bkeys_batch(norms: Sequence[str]) -> list[np.ndarray]:
     packing, pytest-pinned). Fusing the two detectors into one kernel
     shares the flatten/prefix pass and halves the Arrow text transfer of
     the bands stage (VERDICT r3 #3); band semantics are unchanged —
-    minhash_band_hashes over NUM_PERM perm-mins, content-sampled grams."""
+    minhash_band_hashes over the OPH signature, content-sampled grams."""
     out: list[np.ndarray] = []
     for r0, r1 in _chunk_bounds(norms):
         out.extend(_mh_gram_bkeys_chunk(norms[r0:r1]))
@@ -701,29 +632,20 @@ def _mh_gram_bkeys_chunk_flat(norms: Sequence[str]) -> tuple[np.ndarray, np.ndar
     S, pw = _span_prefix(c)
 
     # minhash leg — same steps as _row_distinct_shingle_chunk +
-    # _minhash_from_row_ids, sharing this chunk's prefix arrays. Under
-    # OPH the per-row dedup lexsort (formerly 55% of this kernel) is
-    # SKIPPED: min-per-bin is multiset-insensitive (pytest-pinned,
+    # _minhash_oph_densified, sharing this chunk's prefix arrays. No
+    # per-row dedup lexsort (formerly 55% of this kernel): min-per-bin is
+    # multiset-insensitive (pytest-pinned,
     # test_oph_duplicate_shingles_dont_change_signature) and the span
     # stream is already row-sorted, so duplicates only add linear scatter
-    # work. perm128 keeps the dedup — its kernel pays 128 multiply-adds
-    # per (possibly duplicate) shingle, so there the sort is cheaper.
+    # work.
     row_idx, i, j = _kgram_spans(row_start, lens, C.MINHASH_SHINGLE_K, True)
     starts = np.zeros(n + 1, dtype=np.int64)
     if len(i):
         ids5 = _span_hash(S, pw, i, j) % np.uint64(C.MINHASH_PRIME)
-        if C.MINHASH_SCHEME == "oph-densified":
-            rs, vs = row_idx, ids5
-        else:
-            order = np.lexsort((ids5, row_idx))
-            rs, vs = row_idx[order], ids5[order]
-            keep = np.ones(len(rs), dtype=bool)
-            keep[1:] = (rs[1:] != rs[:-1]) | (vs[1:] != vs[:-1])
-            rs, vs = rs[keep], vs[keep]
-        np.cumsum(np.bincount(rs, minlength=n), out=starts[1:])
-        sigs = _minhash_from_row_ids(vs, starts, n)
+        np.cumsum(np.bincount(row_idx, minlength=n), out=starts[1:])
+        sigs = _minhash_oph_densified(ids5, starts, n)
     else:
-        sigs = _minhash_from_row_ids(np.empty(0, np.uint64), starts, n)
+        sigs = _minhash_oph_densified(np.empty(0, np.uint64), starts, n)
     bh = minhash_band_hashes(sigs).astype(np.uint64)  # (n, BANDS)
     band_ids = (np.arange(C.BANDS, dtype=np.uint64) << np.uint64(57))[None, :]
     mh_keys = (_BKEY_DET_MH | band_ids | (bh & _BKEY_HASH_MASK)).astype(np.int64)

@@ -40,16 +40,9 @@ def get_spark(
         # G1 (the JVM default), explicitly: controlled A-B on the full
         # 2M-row pipeline at local[8] measured ParallelGC 1356 s vs G1
         # 1205 s (64g heap), and the standalone PPJoin query 114 s vs
-        # 41 s — the earlier ParallelGC reading did not reproduce under
-        # clean conditions. Overridable via SPARK_GRAFT_GC for A-B runs.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_GC", "-XX:+UseG1GC"),
-        )
-        .config(
-            "spark.executor.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_GC", "-XX:+UseG1GC"),
-        )
+        # 41 s.
+        .config("spark.driver.extraJavaOptions", "-XX:+UseG1GC")
+        .config("spark.executor.extraJavaOptions", "-XX:+UseG1GC")
     )
     # Shuffle/spill files land in spark.local.dir (default /tmp — the
     # box's single disk). On a real cluster this is per-node NVMe that
@@ -67,7 +60,8 @@ def get_spark(
     # 109-137 s at identical bytes), GC 3-4x lower, task skew gone
     # (max/median 4.7 -> 1.8), stage wall -14%. Same argument holds on a
     # real cluster: per-task working sets should track L2/LLC share, not
-    # IO-optimal block size. Env-overridable for A-B replays.
+    # IO-optimal block size. Env-overridable: the right share depends on
+    # the deployment's cache size.
     adv_mb = os.environ.get("SPARK_GRAFT_ADVISORY_MB", "16")
     b = b.config(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes", f"{int(adv_mb)}m"

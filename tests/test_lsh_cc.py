@@ -145,35 +145,6 @@ def test_source_gate_drops_unverifiable_pairs_and_logs(spark, tmp_path):
     assert logged == [("ungated_pairs_dropped", 2)]
 
 
-def test_pair_gen_agg_matches_join(spark):
-    # docstring contract: 'agg' (collect_set + double explode) and 'join'
-    # (sort-merge self-join) emit the identical pair set INCLUDING the
-    # per-detector hit counts and star flags, across exact dups,
-    # hamming-near dups, token dups and a hot over-cap band group.
-    long = " ".join(f"word{i}" for i in range(40))
-    rows = (
-        [("a", long), ("b", long), ("c", long.replace("word20", "wordXX"))]
-        + [(f"h{i:03d}", f"shared prefix words number{i}") for i in range(30)]
-        + [("z", "totally different thing entirely")]
-    )
-    norm, sigs = _norm_sig(spark, rows)
-    bands = build_bands(norm, sigs)
-
-    def snap(mode, sizing="join"):
-        return {
-            (r.a, r.b, r.det, r.mh_hits, r.gram_hits, r.starred)
-            for r in candidate_pairs(
-                bands, band_group_cap=5, gate=False, pair_gen=mode, sizing=sizing
-            ).collect()
-        }
-
-    assert snap("agg") == snap("join")
-    # 'window' sizing (count/min OVER bkey instead of the sizes join) must
-    # be pair-for-pair identical too, under both pair_gen modes.
-    assert snap("join", sizing="window") == snap("join")
-    assert snap("agg", sizing="window") == snap("join")
-
-
 def test_candidate_pairs_explicit_partitioning(spark):
     # north_rule: explicit partition counts — the band keys must be
     # hash-repartitioned to the requested count before the self-join.
@@ -304,35 +275,70 @@ def test_cc_cleanup_spares_concurrent_caches(spark, tmp_path):
     bystander.unpersist()
 
 
-def test_hot_stats_deferred_matches_eager(spark):
-    """r6: the deferred (Observation-riding) hot-band accounting must
-    report the same lsh_hot_band_groups / lsh_hot_band_rows_starred
-    values as the legacy eager collect."""
+def _hot_metrics(bands, band_group_cap):
+    """lsh_hot_band_groups / lsh_hot_band_rows_starred as candidate_pairs
+    reports them after one materialization of its output."""
     from simhash_spark.util import flush_deferred_metrics
 
+    metrics = {}
+    df = candidate_pairs(
+        bands,
+        band_group_cap=band_group_cap,
+        metrics_sink=lambda n, v, **t: metrics.setdefault(n, v),
+    )
+    df.count()
+    flush_deferred_metrics(df)
+    return metrics["lsh_hot_band_groups"], metrics["lsh_hot_band_rows_starred"]
+
+
+def _hot_truth(bands, band_group_cap):
+    """The same two numbers from a plain groupBy count over the band
+    table: non-exact groups over the cap, and their rows."""
+    hot = (
+        bands.groupBy("bkey")
+        .count()
+        .filter(
+            (F.shiftrightunsigned("bkey", 62) != 0) & (F.col("count") > band_group_cap)
+        )
+        .agg(F.count("*").alias("groups"), F.sum("count").alias("rows"))
+        .first()
+    )
+    return hot["groups"], hot["rows"] or 0
+
+
+def test_hot_stats_deferred_matches_eager(spark):
+    """The Observation-riding hot-band accounting equals a groupBy count
+    of the over-cap groups computed here."""
     rows = [(f"h{i:03d}", f"shared prefix words number{i}") for i in range(30)]
     norm, sigs = _norm_sig(spark, rows)
     bands = build_bands(norm, sigs)
+    got = _hot_metrics(bands, 5)
+    assert got == _hot_truth(bands, 5)
+    assert got[0] > 0 and got[1] > got[0]
 
-    def hot_metrics(stats):
-        metrics = {}
-        df = candidate_pairs(
-            bands,
-            band_group_cap=5,
-            metrics_sink=lambda n, v, **t: metrics.setdefault(n, v),
-            stats=stats,
-        )
-        df.count()
-        flush_deferred_metrics(df)
-        return (
-            metrics["lsh_hot_band_groups"],
-            metrics["lsh_hot_band_rows_starred"],
-        )
 
-    eager = hot_metrics("eager")
-    deferred = hot_metrics("deferred")
-    assert eager == deferred
-    assert eager[0] > 0 and eager[1] > 0
+def test_hot_stats_exact_at_a_million_groups(spark):
+    """Integer accounting holds at >= 10^6 hot groups: a UDF-free band
+    table of 10^6 mh groups of 3 rows plus 10^5 gram groups of 2 rows,
+    every one forced onto the star path by band_group_cap=1, and exact
+    groups (never counted as hot) alongside."""
+    n_mh, n_gram, n_exact = 1_000_000, 100_000, 1_000
+    def det_key(det_id, group):
+        return F.shiftleft(F.lit(det_id).cast("long"), 62).bitwiseOR(group.cast("long"))
+
+    mh = spark.range(3 * n_mh).select(
+        F.col("id").alias("cid"), det_key(2, F.col("id") / 3).alias("bkey")
+    )
+    gram = spark.range(2 * n_gram).select(
+        (F.col("id") + 10 * n_mh).alias("cid"), det_key(3, F.col("id") / 2).alias("bkey")
+    )
+    exact = spark.range(2 * n_exact).select(
+        F.col("id").alias("cid"), (F.col("id") % n_exact).alias("bkey")
+    )
+    bands = mh.unionByName(gram).unionByName(exact)
+    want = (n_mh + n_gram, 3 * n_mh + 2 * n_gram)
+    assert _hot_truth(bands, 1) == want
+    assert _hot_metrics(bands, 1) == want
 
 
 def test_cc_driver_fastpath_matches_loop(spark, tmp_path):

@@ -1,22 +1,12 @@
 """One-Permutation-Hashing minhash scheme (config.MINHASH_SCHEME =
 'oph-densified'): kernel oracle, densification contract, estimator
 quality, and the strided band layout that undoes fill-run correlation.
-
-Scheme selection is process-local here (monkeypatched config attr — the
-kernels read it at call time); the Spark path selects it via the
-SPARK_GRAFT_MINHASH_SCHEME env var at worker launch instead.
 """
 
 import numpy as np
-import pytest
 
 import simhash_spark.config as C
 from simhash_spark import reference as R
-
-
-@pytest.fixture
-def oph(monkeypatch):
-    monkeypatch.setattr(C, "MINHASH_SCHEME", "oph-densified")
 
 
 def _brute_oph(ids: np.ndarray) -> np.ndarray:
@@ -38,7 +28,7 @@ def _brute_oph(ids: np.ndarray) -> np.ndarray:
     return np.array(out, dtype=np.int64)
 
 
-def test_oph_kernel_matches_python_oracle(oph):
+def test_oph_kernel_matches_python_oracle():
     rng = np.random.default_rng(5)
     texts = ["".join(rng.choice(list("abcdef "), 40)) for _ in range(50)]
     norms = R.normalize_batch(texts)
@@ -51,7 +41,7 @@ def test_oph_kernel_matches_python_oracle(oph):
             assert (sigs[i] == _brute_oph(ids)).all(), nm
 
 
-def test_oph_invariants(oph):
+def test_oph_invariants():
     m = R.minhash_batch(["abcdefgh ijklmnop", "abcdefgh ijklmnop", "zzzz yyyy xxxx", "", None])
     assert (m[0] == m[1]).all()                      # deterministic
     assert (m[3] == C.MINHASH_EMPTY).all()           # empty -> sentinel row
@@ -61,7 +51,7 @@ def test_oph_invariants(oph):
     assert (nonempty >= 0).all() and (nonempty < C.MINHASH_PRIME).all()
 
 
-def test_oph_estimates_jaccard(oph):
+def test_oph_estimates_jaccard():
     """Collision fraction across the 128 bins ~ true Jaccard (the
     densified-OPH unbiasedness property the banding math relies on)."""
     base = "the quick brown fox jumps over the lazy dog " * 6
@@ -78,10 +68,9 @@ def test_oph_estimates_jaccard(oph):
         assert abs(est - true) < 0.17, (est, true)
 
 
-def test_oph_band_layout_strided(oph):
-    """oph bands take slots {j, j+32, j+64, j+96}; perm128 keeps the
-    pinned consecutive layout — both asserted against a hand-rolled
-    polyhash so a silent layout swap fails loudly."""
+def test_oph_band_layout_strided():
+    """oph bands take slots {j, j+32, j+64, j+96} — asserted against a
+    hand-rolled polyhash so a silent layout swap fails loudly."""
     rng = np.random.default_rng(7)
     sigs = rng.integers(0, C.MINHASH_PRIME, size=(3, C.NUM_PERM), dtype=np.int64)
 
@@ -96,19 +85,12 @@ def test_oph_band_layout_strided(oph):
     v = sigs.astype(np.uint64).reshape(3, C.ROWS, C.BANDS).transpose(0, 2, 1)
     assert (got == poly(v)).all()
 
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(C, "MINHASH_SCHEME", "perm128")
-        got_perm = R.minhash_band_hashes(sigs)
-    v = sigs.astype(np.uint64).reshape(3, C.BANDS, C.ROWS)
-    assert (got_perm == poly(v)).all()
-    assert (got != got_perm).any()
 
-
-def test_oph_duplicate_shingles_dont_change_signature(oph):
+def test_oph_duplicate_shingles_dont_change_signature():
     """min-per-bin is multiset-insensitive: feeding the same id twice via
     the row-ids entry point must not move any slot."""
     ids = np.array([11, 99, 11, 42, 99], dtype=np.uint64)
     once = np.array([11, 99, 42], dtype=np.uint64)
-    s_dup = R._minhash_from_row_ids(ids, np.array([0, 5]), 1)
-    s_once = R._minhash_from_row_ids(once, np.array([0, 3]), 1)
+    s_dup = R._minhash_oph_densified(ids, np.array([0, 5]), 1)
+    s_once = R._minhash_oph_densified(once, np.array([0, 3]), 1)
     assert (s_dup == s_once).all()

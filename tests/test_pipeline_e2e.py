@@ -94,3 +94,20 @@ def test_lineage_and_metrics_written(pipeline_run):
     # CC reports its work either way: per-round convergence metrics from
     # the iterative loop, or the bounded-graph driver fast path (r6).
     assert {"cc_changed", "cc_fastpath_edges"} & names
+
+
+def test_string_id_key_matches_cid_default(pipeline_run, tmp_path, monkeypatch):
+    """ID_KEY=clip_id (the string-keyed interior verify's collision guard
+    names as its remediation) clusters the corpus exactly like the cid
+    default."""
+    import simhash_spark.config as C
+
+    pipe, clips, *_, clusters = pipeline_run
+    monkeypatch.setattr(C, "ID_KEY", "clip_id")
+    monkeypatch.setitem(C.SEMANTICS, "id_key", "legacy-string")
+    spipe = DedupPipeline(pipe.spark, str(tmp_path / "ckpt-str"), EngineConfig(partitions=4))
+    got = spipe.run(clips)
+    assert "cid" not in spipe.store.read("profile").columns
+    assert dict(spipe.store.read("bands").dtypes)["clip_id"] == "string"
+    want = sorted((r.clip_id, r.cluster_id) for r in clusters.collect())
+    assert sorted((r.clip_id, r.cluster_id) for r in got.collect()) == want

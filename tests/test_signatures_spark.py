@@ -139,44 +139,14 @@ def test_jaccard_udf_matches_reference(spark):
 
 
 def test_fused_mh_gram_bkeys_match_jvm_packing(spark):
-    """The fused mh+gram kernel emits PRE-PACKED bkeys; they must be
-    bit-identical to the un-fused path (minhash_bands_udf /
-    substring_grams_udf exploded + lsh._pack_bkey JVM shifts) — the
-    packing layout is load-bearing for every downstream keyed op."""
-    from simhash_spark.functions.signatures import mh_gram_bkeys_udf
+    """The fused mh+gram mapInArrow kernel emits PRE-PACKED, pre-exploded
+    (id, bkey) rows; they must be bit-identical to the un-fused path
+    (minhash_bands_udf / substring_grams_udf exploded + lsh._pack_bkey
+    JVM shifts) — the packing layout is load-bearing for every
+    downstream keyed op. Covers string AND cid id columns, empty/None/
+    long rows."""
+    from simhash_spark.functions.signatures import mh_gram_bkeys_exploded
     from simhash_spark.operators.lsh import _pack_bkey
-
-    texts = _texts() + ["", "ab", "x" * 70, None]
-    df = spark.createDataFrame(
-        [(str(i), t) for i, t in enumerate(texts)], "clip_id string, text string"
-    ).select("clip_id", normalize_udf("text").alias("norm_text"))
-    fused = {
-        (r.clip_id, r.bkey)
-        for r in df.select(
-            "clip_id", F.explode(mh_gram_bkeys_udf("norm_text")).alias("bkey")
-        ).collect()
-    }
-    mh = df.select(
-        "clip_id",
-        F.posexplode(minhash_bands_udf("norm_text")).alias("band_id", "band_hash"),
-    ).select("clip_id", _pack_bkey(2, F.col("band_id"), F.col("band_hash")).alias("bkey"))
-    gr = df.select(
-        "clip_id", F.explode(substring_grams_udf("norm_text")).alias("band_hash")
-    ).select("clip_id", _pack_bkey(3, 0, F.col("band_hash")).alias("bkey"))
-    want = {(r.clip_id, r.bkey) for r in mh.unionByName(gr).collect()}
-    assert fused == want
-
-
-def test_arrow_bands_kernel_matches_pandas_kernel(spark):
-    """BANDS_KERNEL='arrow' (mapInArrow, flat pre-exploded output) and
-    'pandas' (ArrayType UDF + JVM explode) must produce the identical
-    (id, bkey) multiset — the flat kernel is an execution shape, not a
-    semantics change. Covers string AND cid id columns, empty/None/long
-    rows."""
-    from simhash_spark.functions.signatures import (
-        mh_gram_bkeys_exploded,
-        mh_gram_bkeys_udf,
-    )
 
     texts = _texts() + ["", "ab", "x" * 70, None]
     base = spark.createDataFrame(
@@ -186,18 +156,16 @@ def test_arrow_bands_kernel_matches_pandas_kernel(spark):
         (base, "clip_id"),
         (base.select(F.xxhash64("clip_id").alias("cid"), "norm_text"), "cid"),
     ]:
-        arrow = sorted(
-            map(tuple, mh_gram_bkeys_exploded(df, id_col=id_col).collect())
-        )
-        pandas = sorted(
-            map(
-                tuple,
-                df.select(
-                    id_col, F.explode(mh_gram_bkeys_udf("norm_text")).alias("bkey")
-                ).collect(),
-            )
-        )
-        assert arrow == pandas
+        fused = sorted(map(tuple, mh_gram_bkeys_exploded(df, id_col=id_col).collect()))
+        mh = df.select(
+            id_col,
+            F.posexplode(minhash_bands_udf("norm_text")).alias("band_id", "band_hash"),
+        ).select(id_col, _pack_bkey(2, F.col("band_id"), F.col("band_hash")).alias("bkey"))
+        gr = df.select(
+            id_col, F.explode(substring_grams_udf("norm_text")).alias("band_hash")
+        ).select(id_col, _pack_bkey(3, 0, F.col("band_hash")).alias("bkey"))
+        want = sorted(map(tuple, mh.unionByName(gr).collect()))
+        assert fused == want
 
 
 def test_flat_bands_kernel_matches_list_form():

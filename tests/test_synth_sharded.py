@@ -1,11 +1,10 @@
 """Sharded corpus writer contract (data-scaling series input).
 
-The data-scaling campaign (bin/data_scaling_campaign.py) compares the
-pipeline across corpora built by TILING fixed 500k-row shards, so the
-properties that make the comparison valid are pinned here: globally
-unique offset clip_ids, per-shard determinism identical to a direct
-``make_clips(seed+k, id_offset)`` call, and a Spark-readable directory
-layout.
+The large-corpus scaling runs (bin/big_scaling_pair.py) build their
+corpora by TILING fixed 500k-row shards, so the properties that make
+the comparison valid are pinned here: globally unique offset clip_ids,
+per-shard determinism identical to a direct ``make_clips(seed+k,
+id_offset)`` call, and a Spark-readable directory layout.
 """
 
 import glob

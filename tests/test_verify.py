@@ -183,5 +183,24 @@ def test_cid_collision_raises_not_corrupts(spark):
         ],
     )
     pairs = _cid_pairs(spark, [(1, 2, "exact", 0, 0, 0)])
-    with pytest.raises(Exception, match="(?i)collision"):
+    with pytest.raises(Exception, match="(?i)collision") as err:
         verify_pairs(pairs, profile).collect()
+    # the remediation must name a value config.ID_KEY accepts
+    assert "SPARK_GRAFT_ID_KEY=clip_id" in str(err.value)
+
+
+def test_id_key_rejects_unknown_value():
+    """config refuses an ID_KEY it cannot run (it names the band table's
+    id column), instead of failing later on a missing column."""
+    import os
+    import subprocess
+    import sys
+
+    env = dict(os.environ, SPARK_GRAFT_ID_KEY="string")
+    out = subprocess.run(
+        [sys.executable, "-c", "import simhash_spark.config"],
+        env=env, capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert out.returncode != 0
+    assert "ValueError" in out.stderr and "clip_id" in out.stderr
